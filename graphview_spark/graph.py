@@ -938,9 +938,11 @@ class GraphDatabase:
         GraphViewConnection.cs:2747-2931, which maintain per-edge average
         degrees in _EdgeAverageDegreeCollection for the cost-based join
         order). Here the same numbers drive the greedy MATCH join order
-        (matching/planner.py:148-153); they self-populate lazily and DML
-        invalidates them, so this call is only needed to force an eager
-        refresh (e.g. after bulk load, before a planning-heavy batch).
+        (matching/planner.py _edge_fanout). The planner computes them
+        only when a join-order choice reads them (a step with a single
+        candidate edge reads none), and DML invalidates them, so this
+        call is only needed to force an eager refresh (e.g. after bulk
+        load, before a batch of patterns whose orders have choices).
         Returns {table: rows} ∪ {edge: (rows, avg_out_degree)}.
 
         ``sample_fraction`` switches edge statistics to the reference's
@@ -1164,6 +1166,8 @@ class GraphDatabase:
             else:
                 cols.append(F.col(p))
         self.nodes[t.name] = self.nodes[t.name].select(*cols)
+        # the row count is unchanged, but cached predicate stats may not be
+        self._pred_stats.pop(t.name, None)
 
     def update_nodes_from(self, table_name: str, updates: DataFrame,
                           set_cols: list[str]) -> None:

@@ -299,8 +299,12 @@ def _edge_fanout(
     reference's Statistics.cs histogram merge). forward = surviving
     edges per source node (how much the frontier multiplies when the
     src alias is bound), reverse = surviving edges per sink node.
-    Everything is cached on the GraphDatabase and invalidated by DML,
-    so this costs nothing per query in steady state."""
+    The counts, predicate stats and histograms behind it are cached on
+    the GraphDatabase, but DML drops them and every new predicate
+    literal is a new predicate-stats key, so a call can launch up to
+    four kinds of Spark job (count, predicate stats, sampling table,
+    histogram). plan_match therefore reads it through _FanoutMemo, only
+    for edges a join-order choice actually compares."""
     try:
         ets = _resolve_edge_types(
             g, e, bindings[e.src_alias], bindings[e.sink_alias]
@@ -322,6 +326,24 @@ def _edge_fanout(
         n_edges / max(src_n, 1) * fwd_sel,
         n_edges / max(sink_n, 1) * rev_sel,
     )
+
+
+class _FanoutMemo(dict):
+    """{id(pattern edge): _edge_fanout(...)} for one plan_match call,
+    filled on first read. Only an ordering decision with more than one
+    candidate reads it, so chains walked from their first alias, single
+    edges and var-length paths plan without computing any statistic."""
+
+    def __init__(self, g, edges, bindings, alias_filters):
+        super().__init__()
+        self._edges = {id(e): e for e in edges}
+        self._args = (g, bindings, alias_filters)
+
+    def __missing__(self, key):
+        g, bindings, alias_filters = self._args
+        got = self[key] = _edge_fanout(
+            g, self._edges[key], bindings, alias_filters)
+        return got
 
 
 def _one_edge_df(g, et: EdgeType, e: PatternEdge, raw: bool = False) -> DataFrame:
@@ -405,10 +427,7 @@ def plan_match(
         if a not in bindings:
             raise MatchPlanError(f"MATCH alias '{a}' is not bound in FROM")
 
-    fanout = {
-        id(e): _edge_fanout(g, e, bindings, alias_filters)
-        for e in pattern.edges
-    }
+    fanout = _FanoutMemo(g, pattern.edges, bindings, alias_filters)
 
     comp_dfs: list[DataFrame] = []
     for comp in pattern.components():
@@ -540,10 +559,11 @@ def _order_component_beam(
     applied immediately as free filters; fixed edges before paths) but
     scores whole orders by Σ estimated intermediate rows, including
     the root scan — so it can start at a selective alias greedy's
-    fixed root can never reach. Driver-side arithmetic over cached
-    statistics only: ≤ MaxStates × |edges| expansions, no Spark jobs
-    beyond the stats the greedy order already computes. Returns None
-    (→ fall back to greedy) when any statistic is unavailable."""
+    fixed root can never reach. Driver-side arithmetic over the
+    plan's fanout memo: ≤ MaxStates × |edges| expansions; Spark jobs
+    run only for statistics not yet cached (every candidate's fanout,
+    the pair merges it scores, predicate stats of each root). Returns
+    None (→ fall back to greedy) when any statistic is unavailable."""
     from graphview_spark.plans import lazy as _lazy
 
     idx_of = {id(e): i for i, e in enumerate(comp_edges)}
@@ -629,7 +649,7 @@ def _order_component_beam(
             fixed = [e for e in touching if not e.is_path]
             pool = fixed or touching or rem[:1]
             for e in pool:
-                fwd, rev = (fanout or {}).get(id(e), (0.0, 0.0))
+                fwd, rev = fanout[id(e)]
                 if e.src_alias in bound:
                     shared, base = e.src_alias, fwd
                 elif e.sink_alias in bound:
@@ -663,8 +683,8 @@ def _order_component_beam(
 def _pick_edge(
     remaining: list[PatternEdge],
     bound: set[str],
-    fanout: dict[int, tuple[float, float]] | None = None,
-    overlap=None,
+    fanout: dict[int, tuple[float, float]],
+    overlap,
 ) -> PatternEdge:
     # prefer edges whose BOTH endpoints are bound (cycle-closing filters
     # first — cheapest), then the touching edge with the LOWEST expansion
@@ -672,7 +692,8 @@ def _pick_edge(
     # MatchGraphInterface.cs:47-189 — a bad first join multiplies every
     # later intermediate, and at 100× data AQE can only re-plan the join
     # strategy, not un-explode the frontier); fixed-length before
-    # var-length (paths multiply rows regardless of degree).
+    # var-length (paths multiply rows regardless of degree). A pool of
+    # one is no choice: it is returned without reading any estimate.
     both = [e for e in remaining if e.src_alias in bound and e.sink_alias in bound]
     if both:
         return both[0]
@@ -685,20 +706,21 @@ def _pick_edge(
         # should not happen after components(), but fall back gracefully
         return remaining[0]
 
+    fixed = [e for e in touching if not e.is_path]
+    pool = fixed if fixed else touching
+    if len(pool) == 1:
+        return pool[0]
+
     def est(e: PatternEdge) -> float:
-        if fanout is None:
-            return 0.0
-        fwd, rev = fanout.get(id(e), (0.0, 0.0))
+        fwd, rev = fanout[id(e)]
         shared = e.src_alias if e.src_alias in bound else e.sink_alias
         base = fwd if e.src_alias in bound else rev
-        if overlap is not None and base != float("inf"):
+        if base != float("inf"):
             # edge-pair histogram merge: scale by how much of this
             # edge's id mass the shared alias's frontier can reach
             base *= overlap(e, shared)
         return base
 
-    fixed = [e for e in touching if not e.is_path]
-    pool = fixed if fixed else touching
     return min(pool, key=est)
 
 

@@ -147,7 +147,13 @@ def _replay_through_engine(
          .parquet(raw, mode="overwrite"))
         for b in range(1, REPLAY_SLICES + 1):
             d = os.path.join(base, f"b{b}")
-            os.rename(os.path.join(raw, f"_b={b}"), d)
+            part = os.path.join(raw, f"_b={b}")
+            if os.path.isdir(part):
+                os.rename(part, d)
+            else:
+                # partitionBy writes no dir for an empty slice (a frame
+                # with fewer rows than REPLAY_SLICES): keep b{b} empty
+                os.makedirs(d)
             # pin arrival order: the file source orders by modification
             # time, and sub-second sequential writes can tie
             for root, _, files in os.walk(d):

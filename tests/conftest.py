@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import types
+import uuid
 
 import pytest
 
@@ -16,6 +19,29 @@ def spark():
 
     s = get_spark("tests", cpus=8)
     yield s
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` runs the block under a fresh
+    Spark job group; on exit ``jobs.n`` holds how many Spark jobs the
+    block launched, read from the status tracker once the listener bus
+    has delivered every event."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        jobs = types.SimpleNamespace(n=0)
+        sc.setJobGroup(group, "jobs counted by a test")
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

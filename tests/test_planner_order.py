@@ -260,3 +260,79 @@ def test_beam_roots_at_selective_alias_in_4edge_cycle(spark, monkeypatch):
     assert roots[0] == "A"  # greedy's root is pinned to FROM order
 
     assert beam_rows == greedy_rows and len(beam_rows) > 0
+
+
+def test_planner_reads_statistics_only_for_choices(spark, spark_jobs):
+    """Every step of an anchored chain has one candidate edge, so no
+    estimate can change the order: planning reads no statistic and the
+    statement launches no Spark job, also right after DML on the
+    traversed edge dropped its cached counts. Two candidate edges from
+    the root are a real choice, and their estimates are computed."""
+    g = GraphDatabase(spark)
+    g.execute(
+        """CREATE TABLE [N] (
+            [ColumnRole:"NodeId"] id INT,
+            [ColumnRole:"Edge",Reference:"N"] R VARBINARY(max),
+            [ColumnRole:"Edge",Reference:"N"] S VARBINARY(max) )"""
+    )
+    g.execute(
+        "INSERT INTO N(id) VALUES " + ",".join(f"({i})" for i in range(1, 9))
+    )
+    g.execute("INSERT EDGE INTO N.R SELECT x, y FROM N x, N y "
+              "WHERE y.id = (x.id % 8) + 1")
+    g.execute("INSERT EDGE INTO N.S SELECT x, y FROM N x, N y "
+              "WHERE x.id <= 2 AND y.id <> x.id")
+    query = """SELECT C.id AS c FROM N A, N B, N C
+               MATCH A-[R]->B-[R]->C WHERE A.id = 1"""
+
+    with spark_jobs() as jobs:
+        res = g.execute(query)
+    assert jobs.n == 0
+    assert [r["c"] for r in res.collect()] == [3]
+    assert not g._edge_counts and not g._pred_stats
+
+    g.execute("INSERT EDGE INTO N.R SELECT x, y FROM N x, N y "
+              "WHERE x.id = 2 AND y.id = 5")
+    with spark_jobs() as jobs:
+        res = g.execute(query)
+    assert jobs.n == 0
+    assert sorted(r["c"] for r in res.collect()) == [3, 5]
+
+    g.execute("""SELECT B.id AS b FROM N A, N B, N C
+                 MATCH A-[R]->B, A-[S]->C""")
+    for edge in ("R", "S"):
+        assert g.catalog.resolve_edge("N", edge).qualified in g._edge_counts
+
+
+def test_update_drops_predicate_stats(spark):
+    """UPDATE ... SET ... WHERE can change which rows pass a cached
+    predicate, so it drops that table's predicate stats; the row count
+    cannot change and stays cached."""
+    g = GraphDatabase(spark)
+    g.execute(
+        """CREATE TABLE [N] (
+            [ColumnRole:"NodeId"] id INT,
+            [ColumnRole:"Property"] p INT,
+            [ColumnRole:"Edge",Reference:"N"] E VARBINARY(max),
+            [ColumnRole:"Edge",Reference:"N"] F VARBINARY(max) )"""
+    )
+    g.execute(
+        "INSERT INTO N(id, p) VALUES "
+        + ",".join(f"({i}, 0)" for i in range(1, 9))
+    )
+    g.execute("INSERT EDGE INTO N.E SELECT x, y FROM N x, N y "
+              "WHERE y.id = (x.id % 8) + 1")
+    g.execute("INSERT EDGE INTO N.F SELECT x, y FROM N x, N y "
+              "WHERE y.id = ((x.id + 1) % 8) + 1")
+    query = """SELECT A.id AS a FROM N A, N B, N C
+               MATCH A-[E]->B, A-[F]->C WHERE B.p = 1"""
+
+    g.execute(query)
+    assert [v[:2] for v in g._pred_stats["N"].values()] == [(0, 8)]
+
+    g.execute("UPDATE N SET p = 1 WHERE id <= 4")
+    assert not g._pred_stats.get("N")
+    assert dict.get(g._node_counts, "N") == 8
+
+    g.execute(query)
+    assert [v[:2] for v in g._pred_stats["N"].values()] == [(4, 8)]

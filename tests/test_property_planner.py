@@ -1,5 +1,5 @@
-"""Property tests for the round-10 join-order machinery (no Spark —
-pure driver-side planning over stubbed statistics).
+"""Property tests for the round-10 join-order machinery. The first two
+need no Spark: pure driver-side planning over stubbed statistics.
 
 The beam and the greedy simulation share one cost model (cached
 fanout × pair-overlap, both-bound closes free, root scan counted), so
@@ -13,14 +13,20 @@ two invariants must hold on random components:
    pinned-root order under the shared cost model. This is the
    property that makes `GV_BEAM_MIN_EDGES` safe to enable: opting in
    can only improve the modeled plan.
+
+A third property runs on a small real graph: the greedy order read
+through plan_match's lazy fanout memo equals the order built from
+eagerly computed estimates for every pattern edge.
 """
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 import graphview_spark.matching.planner as planner
+from graphview_spark.graph import GraphDatabase
 from graphview_spark.matching.pattern import PatternEdge
 
 
@@ -144,3 +150,78 @@ def test_beam_orders_are_valid_and_never_model_worse(comp):
         f"beam modeled worse: {b_cost} > {g_cost}; "
         f"beam={[e.alias for e in beam_order]} root={beam_root}, "
         f"greedy={[e.alias for e in greedy_order]} root={aliases[0]}")
+
+
+_EDGE_TYPES = ("Ring", "Hub", "Skew")
+
+
+@pytest.fixture(scope="module")
+def small_graph(spark):
+    """20 nodes, three edge types with different degrees and id skew,
+    so fanouts, predicate selectivities and pair overlaps all differ."""
+    g = GraphDatabase(spark)
+    g.execute(
+        "CREATE TABLE [N] ([ColumnRole:\"NodeId\"] id INT, "
+        + ", ".join(f'[ColumnRole:"Edge",Reference:"N"] {t} VARBINARY(max)'
+                    for t in _EDGE_TYPES)
+        + ")"
+    )
+    g.execute(
+        "INSERT INTO N(id) VALUES " + ",".join(f"({i})" for i in range(1, 21))
+    )
+    g.execute("INSERT EDGE INTO N.Ring SELECT x, y FROM N x, N y "
+              "WHERE y.id = (x.id % 20) + 1")
+    g.execute("INSERT EDGE INTO N.Hub SELECT x, y FROM N x, N y "
+              "WHERE y.id <= 3 AND x.id <> y.id")
+    g.execute("INSERT EDGE INTO N.Skew SELECT x, y FROM N x, N y "
+              "WHERE x.id >= 15 AND y.id >= 10 AND x.id <> y.id")
+    return g
+
+
+@st.composite
+def patterns(draw):
+    n = draw(st.integers(min_value=2, max_value=4))
+    aliases = [f"a{i}" for i in range(n)]
+    pairs = []
+    for i in range(1, n):
+        j = draw(st.integers(min_value=0, max_value=i - 1))
+        pairs.append((aliases[j], aliases[i]) if draw(st.booleans())
+                     else (aliases[i], aliases[j]))
+    for _ in range(draw(st.integers(min_value=0, max_value=2))):
+        x = draw(st.sampled_from(aliases))
+        y = draw(st.sampled_from(aliases))
+        if x != y:
+            pairs.append((x, y))
+    edges = [
+        PatternEdge(edge_name=draw(st.sampled_from(_EDGE_TYPES)),
+                    src_alias=s, sink_alias=t, alias=f"e{i}",
+                    max_len=draw(st.sampled_from((1, 1, 1, 2))))
+        for i, (s, t) in enumerate(pairs)
+    ]
+    filters = {}
+    for a in draw(st.lists(st.sampled_from(aliases), max_size=2,
+                           unique=True)):
+        op = draw(st.sampled_from(("<=", ">=")))
+        k = draw(st.sampled_from((3, 10, 15)))
+        filters[a] = [f"{a}_id {op} {k}"]
+    return aliases, edges, filters
+
+
+@given(pat=patterns())
+@settings(max_examples=40, deadline=None)
+def test_lazy_fanout_memo_keeps_greedy_order(small_graph, pat):
+    aliases, edges, filters = pat
+    g = small_graph
+    bindings = {a: "N" for a in aliases}
+
+    memo = planner._FanoutMemo(g, edges, bindings, filters)
+    lazy = planner._order_component_greedy(
+        g, aliases[0], list(edges), bindings, memo)
+    eager_fanout = {
+        id(e): planner._edge_fanout(g, e, bindings, filters) for e in edges
+    }
+    eager = planner._order_component_greedy(
+        g, aliases[0], list(edges), bindings, eager_fanout)
+
+    assert [e.alias for e in lazy] == [e.alias for e in eager]
+    assert all(memo[k] == eager_fanout[k] for k in list(memo))

@@ -429,6 +429,32 @@ def test_replay_rows_equal_batch_forms(spark):
     assert got_j == want_j and len(got_j) > 0
 
 
+def test_replay_of_frame_smaller_than_slice_count(spark):
+    """A frame with fewer rows than REPLAY_SLICES leaves some slices
+    empty; partitionBy writes no directory for those, and the replay
+    must still stream the rows it has."""
+    import datetime as dt
+
+    from graphview_spark.streaming.events import build_dedup
+    from graphview_spark.streaming.replay import (
+        REPLAY_SLICES,
+        REPLAY_WATERMARK,
+        _replay_through_engine,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(1, 7, "click", t0, 1.0),
+            (2, 8, "view", t0 + dt.timedelta(minutes=5), 2.0)]
+    assert len(rows) < REPLAY_SLICES
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, event_type string, "
+              "ts timestamp, value double")
+    out = _replay_through_engine(
+        spark, df, lambda s: build_dedup(s, within=REPLAY_WATERMARK),
+        "tiny")
+    assert sorted(map(tuple, out.collect())) == sorted(rows)
+
+
 def test_state_replay_matches_sliced_batch_form(spark):
     """stream_state_replay's emit-set contract, Spark-vs-Spark: the
     update-mode kernel emits one row per (user, present-batch) with
